@@ -72,7 +72,10 @@ object Bench {
         if (bLocal + bFallback > 0)
           budgetBranches(name) = s"local=$bLocal fallback=$bFallback"
         name -> dt
-      } catch { case _: Throwable => name -> -1.0 }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${SparkEntry.describeFailure(e)}")
+        name -> -1.0
+      }
     }
     val budgetFallbacks = budgetBranches.count(_._2.contains("fallback=0") == false)
 
@@ -141,7 +144,10 @@ object Bench {
       }.min
       val (fh, fm) = graft.tsdb.FooterCache.counts
       (nW * 2000 / wSec, nR / rSec, nThr * nR / cSec, fh, fm)
-    } catch { case _: Throwable => (-1.0, -1.0, -1.0, -1L, -1L) }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] store_lanes failed: ${SparkEntry.describeFailure(e)}")
+      (-1.0, -1.0, -1.0, -1L, -1L)
+    }
 
     // The driver captures only the last ~2000 chars of output. At 124
     // registered queries the full per-query map alone is ~2.8 KB — a

@@ -38,4 +38,12 @@ object SparkEntry {
     */
   private def normalize(sql: String): String =
     sql.trim.replaceAll("\\s+", " ")
+
+  /** `<exception class>: <first message line>` — how the driver mains
+    * name a failed row on stderr (a bare message can be null or a
+    * many-line plan dump).
+    */
+  def describeFailure(e: Throwable): String =
+    s"${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 }

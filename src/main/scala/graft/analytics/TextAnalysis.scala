@@ -105,18 +105,13 @@ object TextAnalysis {
     * TakeOrdered (never a global sort); count-desc then pair-asc makes
     * the boundary deterministic.
     */
-  def bpeMergeCandidates(docs: DataFrame, k: Int = 20): DataFrame = {
-    val words = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 2)
-    val vocab = words.groupBy("word").agg(count(lit(1)).as("f"))
-    vocab
+  def bpeMergeCandidates(docs: DataFrame, k: Int = 20): DataFrame =
+    initialVocab(wordUnits(docs))
       .select(col("f"), explode(expr(
         "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
         .as("pair"))
       .groupBy("pair").agg(sum(col("f")).as("cnt"))
       .orderBy(col("cnt").desc, col("pair")).limit(k)
-  }
 
   /** Multi-round BPE TRAINER (round 9, VERDICT r8 missing #3 — the real
     * tokenizer-prep deliverable [[bpeMergeCandidates]]'s single iteration
@@ -124,10 +119,12 @@ object TextAnalysis {
     * vocabulary, exactly the Sennrich et al. 2016 training loop. Per
     * round: count adjacent token pairs weighted by word frequency, take
     * THE top pair (count desc, then (a, b) asc — a total order, so the
-    * boundary is deterministic), apply it greedily left-to-right inside
-    * every word (`aggregate` fold: a fresh merge output never re-merges
-    * with the next token in the same round — standard BPE), repeat on
-    * the updated vocabulary.
+    * boundary is deterministic), apply it left-to-right inside every
+    * word (a fresh merge output never re-merges with the next token in
+    * the same round — standard BPE), repeat on the updated vocabulary.
+    * This is [[bpeRounds]] at `batchM = 1, poolK = 1`: with one accepted
+    * pair the batched merge IS the greedy left-to-right merge, an (a,a)
+    * run included (Round11Spec pins the equivalence).
     *
     * Scale shape — why BPE training is tractable at 100 TB: the corpus
     * is scanned ONCE into the word-frequency table (map-side-combined,
@@ -141,99 +138,48 @@ object TextAnalysis {
     * table a tokenizer ships.
     */
   def bpeTrain(docs: DataFrame, rounds: Int = 6): DataFrame =
-    bpeTrainState(docs, rounds)._1
+    rulesDf(docs.sparkSession, greedyRounds(docs, rounds)._1).drop("sel_rank")
 
-  /** The training loop body shared by [[bpeTrain]] (rules consumer) and
-    * [[bpeEncode]] (final-vocabulary consumer): returns BOTH the merge
-    * table and the post-merge vocabulary `(word, f, toks)` — which IS
-    * the word → subword-sequence mapping a tokenizer ships.
-    */
-  private def bpeTrainState(docs: DataFrame,
-      rounds: Int): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("f"))
-      .withColumn("toks",
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .localCheckpoint(true)
-    val rules = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = vocab
-        .select(col("f"), col("toks"),
-          posexplode(slice(col("toks"), lit(1), size(col("toks")) - 1))
-            .as(Seq("i0", "a")))
-        .withColumn("b", element_at(col("toks"), col("i0") + 2))
-        .groupBy("a", "b").agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val a = top(0).getString(0)
-        val b = top(0).getString(1)
-        val cnt = top(0).getLong(2)
-        rules += ((r.toLong, a, b, a + b, cnt))
-        val prev = vocab
-        vocab = vocab.withColumn("toks",
-            aggregate(col("toks"), array().cast("array<string>"),
-              (acc, x) => when(size(acc) > 0 &&
-                  element_at(acc, -1) === lit(a) && x === lit(b),
-                concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-                .otherwise(concat(acc, array(x)))))
-          .localCheckpoint(true)
-        CheckpointLease.release(prev) // superseded round vocab (guide §5)
-        r += 1
-      }
-    }
-    (rules.toSeq.toDF("round", "pair_a", "pair_b", "merged", "cnt"), vocab)
-  }
+  /** The one-merge-per-round run behind [[bpeTrain]], [[bpeEncode]] and
+    * [[persistBpeVocab]]. */
+  private def greedyRounds(docs: DataFrame,
+      rounds: Int): (Seq[BpeRule], DataFrame, Boolean) =
+    bpeRounds(initialVocab(wordUnits(docs)), firstRound = 1, rounds,
+      batchM = 1, poolK = 1, targetMerges = Int.MaxValue)
 
   /** BATCHED multi-round BPE trainer (VERDICT r9 next #6): [[bpeTrain]]
     * accepts ONE merge per round, so a production 32k-merge vocabulary
-    * would cost 32k sequential Spark jobs. This variant accepts up to
-    * `batchM` merges per round under the standard frequency-threshold
-    * batching discipline: rank the round's top-`poolK` pairs
-    * (cnt desc, a, b) and accept a pair iff it shares NO token with any
-    * higher-ranked pool pair. Accepted pairs are therefore mutually
-    * token-disjoint, which makes the batch well-defined: a matched
-    * position of one pair can never overlap or neighbor a matched
-    * position of another (adjacency would force a shared token), so
-    * applying the batch simultaneously against the PRE-ROUND token
-    * sequence ≡ applying its members sequentially in any order. The merge
-    * itself is a fold that computes matches against the ORIGINAL array
-    * (never against freshly merged output — a cascade would diverge from
-    * the batch semantics), with (a,a)-run parity falling out of the
-    * skip-next discipline. With `batchM = 1` the acceptance rule
-    * degenerates to the plain top-1 (nothing outranks it), so batched ≡
-    * one-at-a-time — Round11Spec pins that equivalence.
-    *
-    * Scale shape: identical to [[bpeTrain]] (corpus scanned ONCE into the
-    * word-frequency table; every round vocab-sized) but a 32k vocab now
-    * takes 32k/batchM rounds; the pool is `poolK` driver rows per round —
-    * the same bounded-driver-state contract as the k-means centroids.
+    * would cost 32k sequential Spark jobs. This one accepts up to
+    * `batchM` token-disjoint merges per round (the acceptance rule in
+    * [[bpeRounds]]) — 32k/batchM rounds — and stops at `targetMerges`
+    * rules (a real tokenizer's stopping rule: vocab size, not round
+    * count) or when the merge supply runs out. `units` is the
+    * pre-tokenized `word` stream — [[wordUnits]], [[bigramUnits]] or
+    * [[charChunkUnits]], each documenting why it exists. Round cost stays
+    * vocab-sized: the pair explode is ≤ Σ|toks| rows and SHRINKS as
+    * merges consume positions (the PLANS.md cost tables come from
+    * [[lastRoundCosts]]); the pool is `poolK` driver rows per round.
     * Returns (round, sel_rank, pair_a, pair_b, merged, cnt).
     */
-  def bpeTrainBatched(docs: DataFrame, rounds: Int = 3, batchM: Int = 3,
-      poolK: Int = 12): DataFrame =
-    bpeBatchedLoop(wordUnits(docs), rounds, batchM, poolK,
-      targetMerges = Int.MaxValue)
+  def bpeTrainBatched(units: DataFrame, rounds: Int = 3, batchM: Int = 3,
+      poolK: Int = 12, targetMerges: Int = Int.MaxValue): DataFrame =
+    rulesDf(units.sparkSession, bpeRounds(initialVocab(units), firstRound = 1,
+      rounds, batchM, poolK, targetMerges)._1)
 
   /** Whitespace pre-tokenization: the unit stream the word-level trainers
     * count frequencies over.
     */
-  private def wordUnits(docs: DataFrame): DataFrame =
+  private[graft] def wordUnits(docs: DataFrame): DataFrame =
     docs.select(explode(split(col("text"), " ")).as("word"))
 
-  /** SentencePiece-style pre-tokenization for the PRODUCTION-DEPTH drive:
-    * consecutive word PAIRS joined by "_" (odd tail kept alone) — tokens
-    * may cross word boundaries, the no-hard-split discipline. Needed
-    * because the synthetic corpus draws from a 30-word vocabulary whose
-    * word-internal merge supply exhausts at 89 rules; two-word units lift
-    * the distinct-unit space to ~|words|² and the merge supply into the
+  /** SentencePiece-style pre-tokenization for the PRODUCTION-DEPTH drive
+    * (VERDICT r11 #3; `tx_bpe_train_scaled` trains it to 256 rules at
+    * batchM = 8, ~32 driver-sequential rounds): consecutive word PAIRS
+    * joined by "_" (odd tail kept alone) — tokens may cross word
+    * boundaries, the no-hard-split discipline. Needed because the
+    * synthetic corpus draws from a 30-word vocabulary whose word-internal
+    * merge supply exhausts at 89 rules; two-word units lift the
+    * distinct-unit space to ~|words|² and the merge supply into the
     * thousands while the frequency table stays unit-vocabulary-sized.
     */
   private[graft] def bigramUnits(docs: DataFrame): DataFrame =
@@ -244,19 +190,6 @@ object TextAnalysis {
           "THEN concat(element_at(ws, CAST(i * 2 - 1 AS INT)), '_', " +
           "element_at(ws, CAST(i * 2 AS INT))) " +
           "ELSE element_at(ws, CAST(i * 2 - 1 AS INT)) END)")).as("word"))
-
-  /** PRODUCTION-SCALE training drive (VERDICT r11 #3): run the batched
-    * loop over [[bigramUnits]] until `targetMerges` rules have
-    * accumulated (a real tokenizer's stopping rule — vocab size, not
-    * round count). At batchM = 8 a 256-merge vocabulary is ~32
-    * driver-sequential rounds; per-round cost stays vocab-sized
-    * throughout (the pair explode is ≤ Σ|toks| rows and SHRINKS as
-    * merges consume positions — the cost table in PLANS.md is captured
-    * from [[lastRoundCosts]]).
-    */
-  def bpeTrainScaled(docs: DataFrame, targetMerges: Int = 256,
-      batchM: Int = 8, poolK: Int = 48, maxRounds: Int = 96): DataFrame =
-    bpeBatchedLoop(bigramUnits(docs), maxRounds, batchM, poolK, targetMerges)
 
   /** Fixed-width char-chunk pre-tokenization for the VOCAB-SCALE drive
     * (VERDICT r12 next #7): spaces become the SentencePiece word-boundary
@@ -270,6 +203,13 @@ object TextAnalysis {
     * the `x_` / `_y` boundary merges a no-hard-split tokenizer learns.
     * Non-overlap keeps the frequency table an honest partition of the
     * corpus (a sliding window would count each char position n times).
+    *
+    * Trained to 1024 rules at batchM = 16, acceptance is clash-limited in
+    * the tail (~10 rules/round regardless of batchM), so the drive is
+    * ~110 driver-sequential rounds; the pair explode starts at ~38 k
+    * weighted rows and SHRINKS to ~6 k as merges consume positions
+    * (PLANS.md round-13 cost table). [[bpeTrainDeepRestartable]] trains
+    * this stream to 4096 rules.
     */
   private[graft] def charChunkUnits(docs: DataFrame, n: Int = 8): DataFrame =
     docs.select(translate(col("text"), " ", "_").as("t"))
@@ -277,31 +217,31 @@ object TextAnalysis {
         s"transform(sequence(1, greatest((length(t) + ${n - 1}) div $n, 1)), " +
           s"i -> substring(t, CAST((i - 1) * $n + 1 AS INT), $n))")).as("word"))
 
-  /** VOCAB-SCALE training drive (VERDICT r12 next #7): the batched loop
-    * over [[charChunkUnits]] to a 1024-rule merge table — past the point
-    * where every earlier unit stream saturates ([[bigramUnits]] feeds
-    * [[bpeTrainScaled]]'s 256 but exhausts soon after). Acceptance is
-    * clash-limited in the tail (~10 rules/round regardless of batchM), so
-    * 1024 rules is ~110 driver-sequential rounds; per-round cost stays
-    * vocab-sized throughout — the pair explode starts at ~38 k weighted
-    * rows and SHRINKS to ~6 k as merges consume positions (PLANS.md
-    * round-13 cost table, captured from [[lastRoundCosts]]).
+  /** The starting vocabulary every trainer begins from: the unit stream
+    * collapsed ONCE into its frequency table (units shorter than 2 chars
+    * have nothing to merge), each unit split into single-char tokens —
+    * `(word, f, toks)`.
     */
-  def bpeTrainDeep(docs: DataFrame, targetMerges: Int = 1024,
-      batchM: Int = 16, poolK: Int = 96, maxRounds: Int = 160): DataFrame =
-    bpeBatchedLoop(charChunkUnits(docs), maxRounds, batchM, poolK, targetMerges)
+  private def initialVocab(units: DataFrame): DataFrame =
+    units.where(length(col("word")) >= 2)
+      .groupBy("word").agg(count(lit(1)).as("f"))
+      .withColumn("toks",
+        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
 
   /** RESTARTABLE vocab-scale training (VERDICT r15 next #7): the batched
-    * loop with its state persisted PER ROUND under `stateRoot`, so a
-    * production-depth drive (4096+ rules) runs as resumable SITTINGS
-    * instead of one monolithic job — a crashed or budget-evicted trainer
-    * resumes from its last durable round with zero recomputation.
+    * loop over [[charChunkUnits]] with its state persisted PER ROUND
+    * under `stateRoot`, so a production-depth drive (4096+ rules) runs
+    * as resumable SITTINGS instead of one monolithic job — a crashed or
+    * budget-evicted trainer resumes from its last durable round with
+    * zero recomputation.
     *
-    * State layout (the store's idempotent-overwrite ack discipline):
+    * State layout (the store's idempotent-overwrite ack discipline, the
+    * reference's enqueue-purge / ack-purge pair applied to rounds):
     * {{{
     *   rules/batch-NNNNN.parquet   round N's accepted rules (overwrite)
     *   vocab/round-NNNNN/          the post-round-N vocabulary
     *   commits/commit-NNNNN        ack marker: round N durably complete
+    *   exhausted                   the merge supply ran out: drive done
     * }}}
     * Each round writes DATA first (rules batch + vocab checkpoint, both
     * idempotent overwrites a crash-replay simply rewrites), then the
@@ -317,111 +257,161 @@ object TextAnalysis {
     */
   def bpeTrainDeepRestartable(docs: DataFrame, stateRoot: String,
       targetMerges: Int = 4096, batchM: Int = 16, poolK: Int = 96,
-      roundsPerSitting: Int = 64, checkpointEvery: Int = 16): (DataFrame, Boolean) =
-    bpeRestartableSitting(charChunkUnits(docs), stateRoot, targetMerges,
-      batchM, poolK, roundsPerSitting, checkpointEvery)
+      roundsPerSitting: Int = 64, checkpointEvery: Int = 16): (DataFrame, Boolean) = {
+    import java.nio.file.{FileAlreadyExistsException, Files => JFiles, Path,
+      Paths => JPaths, StandardOpenOption}
+    import scala.jdk.CollectionConverters._
+    val spark = docs.sparkSession
+    val root = JPaths.get(stateRoot)
+    val commitsDir = root.resolve("commits")
+    val rulesDir = root.resolve("rules")
+    val vocabDir = root.resolve("vocab")
+    val doneMarker = root.resolve("exhausted")
+    JFiles.createDirectories(commitsDir)
+    def list(dir: Path): Seq[String] = {
+      val s = JFiles.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    def deleteTree(p: Path): Unit =
+      JFiles.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(q => JFiles.deleteIfExists(q))
+    def markOnce(p: Path): Unit =
+      try JFiles.write(p, Array.emptyByteArray, StandardOpenOption.CREATE_NEW)
+      catch { case _: FileAlreadyExistsException => () }
+    val committed = list(commitsDir).filter(_.matches("commit-\\d{5}"))
+      .map(_.stripPrefix("commit-").toInt).sorted
+    val firstRound = committed.lastOption.getOrElse(0) + 1
+    // crash hygiene: a batch file written without its ack (crash between
+    // the data write and the marker) is UNCOMMITTED — drop it, the
+    // resumed drive re-derives and re-writes it deterministically
+    if (JFiles.exists(rulesDir))
+      list(rulesDir).filter(n => n.matches("batch-\\d{5}\\.parquet") &&
+          n.stripPrefix("batch-").takeWhile(_.isDigit).toInt >= firstRound)
+        .foreach(n => deleteTree(rulesDir.resolve(n)))
+    def allRules = loadBpeRules(spark, stateRoot)
+      .orderBy(col("round"), col("sel_rank"))
+    var rulesCount: Long =
+      if (committed.isEmpty) 0L else loadBpeRules(spark, stateRoot).count()
+    if (rulesCount >= targetMerges || JFiles.exists(doneMarker))
+      return (allRules, true)
+    // rules accumulated since the last durable checkpoint
+    val pending = scala.collection.mutable.ArrayBuffer.empty[BpeRule]
+    var lastCommitted = firstRound - 1
+    // DATA first (idempotent overwrites a crash-replay rewrites), ACK
+    // (the CREATE_NEW marker) second — the store's publish discipline
+    def checkpoint(round: Int, vocab: DataFrame): Unit = {
+      rulesDf(spark, pending.toSeq).coalesce(1).write.mode("overwrite")
+        .parquet(rulesDir.resolve(f"batch-$round%05d.parquet").toString)
+      vocab.write.mode("overwrite")
+        .parquet(vocabDir.resolve(f"round-$round%05d").toString)
+      markOnce(commitsDir.resolve(f"commit-$round%05d"))
+      // prune the superseded checkpoint (post-ack, crash-safe)
+      val prev = vocabDir.resolve(f"round-$lastCommitted%05d")
+      if (lastCommitted > 0 && JFiles.exists(prev)) deleteTree(prev)
+      lastCommitted = round
+      pending.clear()
+    }
+    // resume point: the last committed round's vocabulary, or the
+    // initial character split
+    val start =
+      if (committed.isEmpty) initialVocab(charChunkUnits(docs))
+      else spark.read.parquet(
+        vocabDir.resolve(f"round-${committed.last}%05d").toString)
+    val (_, vocab, exhausted) = bpeRounds(start, firstRound, roundsPerSitting,
+      batchM, poolK, (targetMerges - rulesCount).toInt,
+      onRound = (round, v, accepted) => {
+        pending ++= accepted
+        rulesCount += accepted.size
+        // durable every `checkpointEvery` rounds and at every sitting /
+        // drive boundary — resume recomputes at most checkpointEvery−1
+        // rounds, each a deterministic function of the checkpointed
+        // vocabulary (the prefix-stability rule), so coarser checkpoints
+        // trade resume work for per-round I/O without touching the
+        // bit-identity contract
+        val inSitting = round - firstRound + 1
+        if (inSitting % checkpointEvery == 0 ||
+            inSitting == roundsPerSitting || rulesCount >= targetMerges)
+          checkpoint(round, v)
+      })
+    // an exhausted supply leaves the rounds since the last checkpoint
+    // pending: commit them before the done marker
+    if (pending.nonEmpty) checkpoint(pending.last._1.toInt, vocab)
+    if (exhausted) markOnce(doneMarker)
+    (allRules, exhausted || rulesCount >= targetMerges)
+  }
 
   /** Rules accumulated under a [[bpeTrainDeepRestartable]] state root. */
   def loadBpeRules(spark: SparkSession, stateRoot: String): DataFrame = {
-    import spark.implicits._
     val dir = java.nio.file.Paths.get(stateRoot, "rules")
     val hasBatches = java.nio.file.Files.exists(dir) && {
       val s = java.nio.file.Files.list(dir)
       try s.iterator().hasNext finally s.close()
     }
-    if (!hasBatches)
-      return Seq.empty[(Long, Long, String, String, String, Long)]
-        .toDF("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
-    spark.read.parquet(dir.toString + "/*")
+    if (hasBatches) spark.read.parquet(dir.toString + "/*")
+    else rulesDf(spark, Nil)
   }
 
-  private def bpeRestartableSitting(units: DataFrame, stateRoot: String,
-      targetMerges: Int, batchM: Int, poolK: Int,
-      roundsPerSitting: Int, checkpointEvery: Int): (DataFrame, Boolean) = {
-    import java.nio.file.{Files => JFiles, Paths => JPaths, StandardOpenOption}
-    val spark = units.sparkSession
+  /** One merge rule: (round, sel_rank, pair_a, pair_b, merged, cnt). */
+  private type BpeRule = (Long, Long, String, String, String, Long)
+
+  private def rulesDf(spark: SparkSession, rules: Seq[BpeRule]): DataFrame = {
     import spark.implicits._
-    val root = JPaths.get(stateRoot)
-    val commitsDir = root.resolve("commits")
-    val rulesDir = root.resolve("rules")
-    val vocabDir = root.resolve("vocab")
-    JFiles.createDirectories(commitsDir)
-    def committedRounds(): Seq[Int] = {
-      import scala.jdk.CollectionConverters._
-      val s = JFiles.list(commitsDir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("commit-\\d{5}")).map(_.stripPrefix("commit-").toInt)
-        .toSeq.sorted
-      finally s.close()
-    }
-    def doneMarker: java.nio.file.Path = root.resolve("exhausted")
-    val already = committedRounds()
-    var r = already.lastOption.getOrElse(0) + 1
-    // crash hygiene: a batch file written without its ack (crash between
-    // the data write and the marker) is UNCOMMITTED — drop it, the
-    // resumed drive re-derives and re-writes it deterministically
-    if (JFiles.exists(rulesDir)) {
-      import scala.jdk.CollectionConverters._
-      val s = JFiles.list(rulesDir)
-      val orphans =
-        try s.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.matches("batch-\\d{5}\\.parquet") &&
-            n.stripPrefix("batch-").takeWhile(_.isDigit).toInt >= r
-        }.toSeq
-        finally s.close()
-      orphans.foreach { d =>
-        JFiles.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => JFiles.deleteIfExists(p))
-      }
-    }
-    var rulesCount: Long =
-      if (already.isEmpty) 0L
-      else loadBpeRules(spark, stateRoot).count()
-    if (rulesCount >= targetMerges || JFiles.exists(doneMarker))
-      return (loadBpeRules(spark, stateRoot)
-        .orderBy(col("round"), col("sel_rank")), true)
-    // resume point: the last committed round's vocabulary, or the
-    // initial character split
-    var vocab =
-      (if (already.isEmpty)
-        units.where(length(col("word")) >= 2)
-          .groupBy("word").agg(count(lit(1)).as("f"))
-          .withColumn("toks",
-            expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      else spark.read.parquet(
-        vocabDir.resolve(f"round-${already.last}%05d").toString))
-        .localCheckpoint(true)
-    // rules accumulated since the last durable checkpoint
-    val pendingRules = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, String, String, String, Long)]
-    var lastCommitted = r - 1
-    // DATA first (idempotent overwrites a crash-replay rewrites), ACK
-    // (the CREATE_NEW marker) second — the store's publish discipline
-    def checkpoint(round: Int): Unit = {
-      pendingRules.toSeq
-        .toDF("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(rulesDir.resolve(f"batch-$round%05d.parquet").toString)
-      vocab.write.mode("overwrite")
-        .parquet(vocabDir.resolve(f"round-$round%05d").toString)
-      try JFiles.write(commitsDir.resolve(f"commit-$round%05d"),
-        Array.emptyByteArray, StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      // prune the superseded checkpoint (post-ack, crash-safe)
-      val prev = vocabDir.resolve(f"round-$lastCommitted%05d")
-      if (lastCommitted > 0 && JFiles.exists(prev)) {
-        import scala.jdk.CollectionConverters._
-        JFiles.walk(prev).iterator().asScala.toSeq.reverse
-          .foreach(p => JFiles.deleteIfExists(p))
-      }
-      lastCommitted = round
-      pendingRules.clear()
-    }
-    var inSitting = 0
+    rules.toDF("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
+  }
+
+  /** Per-round telemetry from the LAST [[bpeRounds]] run on this driver:
+    * (round, accepted_merges, pair_rows_exploded, seconds).
+    * Observability seam (the FooterCache-counters pattern) — feeds the
+    * PLANS.md cost table proving round cost stays vocab-sized as merges
+    * accumulate.
+    */
+  @volatile private[graft] var lastRoundCosts: Seq[(Int, Int, Long, Double)] = Nil
+
+  /** When true the loop also counts the per-round pair-explode volume
+    * (one extra vocab-sized aggregate per round) — spec-only; the
+    * registered queries keep it off so the benched cost is the plain loop.
+    */
+  @volatile private[graft] var bpeTelemetry: Boolean = false
+
+  /** THE BPE round loop every trainer runs: from the `start` vocabulary
+    * `(word, f, toks)`, up to `rounds` rounds numbered from `firstRound`,
+    * stopping early when `targetMerges` rules have been accepted or the
+    * merge supply runs out. Per round:
+    *
+    *  - count adjacent token pairs weighted by unit frequency and take the
+    *    top-`poolK` (cnt desc, a, b — a total order, so the boundary is
+    *    deterministic);
+    *  - accept a pool pair iff it shares NO token with any higher-ranked
+    *    pool pair, up to `batchM` (and the remaining target). Accepted
+    *    pairs are therefore mutually token-disjoint, which makes the batch
+    *    well-defined: a matched position of one pair can never overlap or
+    *    neighbor a matched position of another (adjacency would force a
+    *    shared token), so applying the batch simultaneously against the
+    *    PRE-ROUND token sequence ≡ applying its members sequentially in any
+    *    order. With `batchM = 1` the rule degenerates to the plain top-1
+    *    (nothing outranks it);
+    *  - merge ([[applyMergeBatch]]), checkpoint the new vocabulary and
+    *    release the superseded one;
+    *  - hand the round number, the new vocabulary and the round's rules to
+    *    `onRound` (the restartable trainer's durable checkpoint).
+    *
+    * @return (accepted rules in (round, sel_rank) order, the final
+    *         vocabulary, whether the merge supply ran out)
+    */
+  private def bpeRounds(start: DataFrame, firstRound: Int, rounds: Int,
+      batchM: Int, poolK: Int, targetMerges: Int,
+      onRound: (Int, DataFrame, Seq[BpeRule]) => Unit = (_, _, _) => ())
+      : (Seq[BpeRule], DataFrame, Boolean) = {
+    var vocab = start.localCheckpoint(true)
+    val rules = scala.collection.mutable.ArrayBuffer.empty[BpeRule]
+    val costs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Double)]
+    var r = firstRound
     var exhausted = false
-    while (inSitting < roundsPerSitting && !exhausted &&
-        rulesCount < targetMerges) {
+    while (r < firstRound + rounds && !exhausted && rules.size < targetMerges) {
+      val t0 = System.nanoTime()
+      val pairRows = if (bpeTelemetry) vocab.select(
+        sum(greatest(size(col("toks")) - 1, lit(0)).cast("long"))).head().getLong(0)
+      else -1L
       val pool = vocab
         .select(col("f"), col("toks"),
           posexplode(slice(col("toks"), lit(1), size(col("toks")) - 1))
@@ -431,47 +421,33 @@ object TextAnalysis {
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(poolK).collect()
         .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
-      if (pool.isEmpty) {
-        if (pendingRules.nonEmpty) checkpoint(r - 1)
-        exhausted = true
-        try JFiles.write(doneMarker, Array.emptyByteArray,
-          StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      } else {
+      if (pool.isEmpty) exhausted = true
+      else {
         val accepted = pool.zipWithIndex.filter { case ((a, b, _), i) =>
           !pool.take(i).exists { case (c, d, _) =>
             c == a || c == b || d == a || d == b }
-        }.map(_._1).take(math.min(batchM.toLong,
-          targetMerges - rulesCount).toInt)
-        val prev = vocab
-        vocab = applyMergeBatch(vocab, accepted.toSeq).localCheckpoint(true)
-        CheckpointLease.release(prev) // superseded round vocab (guide §5)
-        accepted.zipWithIndex.foreach { case ((a, b, cnt), j) =>
-          pendingRules += ((r.toLong, (j + 1).toLong, a, b, a + b, cnt))
+        }.map(_._1).take(math.min(batchM, targetMerges - rules.size)).toSeq
+        val roundRules = accepted.zipWithIndex.map { case ((a, b, cnt), j) =>
+          (r.toLong, (j + 1).toLong, a, b, a + b, cnt)
         }
-        rulesCount += accepted.length
-        inSitting += 1
-        // durable every `checkpointEvery` rounds and at every sitting /
-        // drive boundary — resume recomputes at most checkpointEvery−1
-        // rounds, each a deterministic function of the checkpointed
-        // vocabulary (the prefix-stability rule), so coarser checkpoints
-        // trade resume work for per-round I/O without touching the
-        // bit-identity contract
-        if (inSitting % checkpointEvery == 0 ||
-            inSitting == roundsPerSitting || rulesCount >= targetMerges)
-          checkpoint(r)
+        rules ++= roundRules
+        val prev = vocab
+        vocab = applyMergeBatch(vocab, accepted).localCheckpoint(true)
+        CheckpointLease.release(prev) // superseded round vocab (guide §5)
+        costs += ((r, accepted.length, pairRows, (System.nanoTime() - t0) / 1e9))
+        onRound(r, vocab, roundRules)
         r += 1
       }
     }
-    if (pendingRules.nonEmpty) checkpoint(r - 1)
-    (loadBpeRules(spark, stateRoot).orderBy(col("round"), col("sel_rank")),
-      exhausted || rulesCount >= targetMerges)
+    lastRoundCosts = costs.toSeq
+    (rules.toSeq, vocab, exhausted)
   }
 
-  /** One batched-merge application — the simultaneous fold shared by
-    * [[bpeBatchedLoop]] and the restartable sittings: match flags come
-    * from the ORIGINAL token array (never freshly merged output), the
-    * accumulator carries only the skip bit.
+  /** One batched-merge application — the simultaneous fold of
+    * [[bpeRounds]]: match flags come from the ORIGINAL token array (never
+    * freshly merged output — a cascade would diverge from the batch
+    * semantics), the accumulator carries only the skip bit, and
+    * (a,a)-run parity falls out of the skip-next discipline.
     */
   private def applyMergeBatch(vocab: DataFrame,
       accepted: Seq[(String, String, Long)]): DataFrame =
@@ -621,72 +597,6 @@ object TextAnalysis {
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"))
 
-  /** Per-round telemetry from the LAST [[bpeBatchedLoop]] run on this
-    * driver: (round, accepted_merges, pair_rows_exploded, seconds).
-    * Observability seam (the FooterCache-counters pattern) — feeds the
-    * PLANS.md cost table proving round cost stays vocab-sized as merges
-    * accumulate.
-    */
-  @volatile private[graft] var lastRoundCosts: Seq[(Int, Int, Long, Double)] = Nil
-
-  /** When true the loop also counts the per-round pair-explode volume
-    * (one extra vocab-sized aggregate per round) — probe-only; the
-    * registered query keeps it off so the benched cost is the plain loop.
-    */
-  @volatile private[graft] var bpeTelemetry: Boolean = false
-
-  private def bpeBatchedLoop(units: DataFrame, rounds: Int, batchM: Int,
-      poolK: Int, targetMerges: Int): DataFrame = {
-    val spark = units.sparkSession
-    import spark.implicits._
-    var vocab = units
-      .where(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("f"))
-      .withColumn("toks",
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .localCheckpoint(true)
-    val rules = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, String, String, String, Long)]
-    val costs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Double)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted && rules.size < targetMerges) {
-      val t0 = System.nanoTime()
-      val pairRows = if (bpeTelemetry) vocab.select(
-        sum(greatest(size(col("toks")) - 1, lit(0)).cast("long"))).head().getLong(0)
-      else -1L
-      val pool = vocab
-        .select(col("f"), col("toks"),
-          posexplode(slice(col("toks"), lit(1), size(col("toks")) - 1))
-            .as(Seq("i0", "a")))
-        .withColumn("b", element_at(col("toks"), col("i0") + 2))
-        .groupBy("a", "b").agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(poolK).collect()
-        .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
-      if (pool.isEmpty) exhausted = true
-      else {
-        val accepted = pool.zipWithIndex.filter { case ((a, b, _), i) =>
-          !pool.take(i).exists { case (c, d, _) =>
-            c == a || c == b || d == a || d == b }
-        }.map(_._1).take(math.min(batchM, targetMerges - rules.size))
-        accepted.zipWithIndex.foreach { case ((a, b, cnt), j) =>
-          rules += ((r.toLong, (j + 1).toLong, a, b, a + b, cnt))
-        }
-        // simultaneous application against the pre-round sequence
-        // (applyMergeBatch: match flags from the ORIGINAL toks; the fold
-        // only carries the "previous position merged" skip bit)
-        val prev = vocab
-        vocab = applyMergeBatch(vocab, accepted.toSeq).localCheckpoint(true)
-        CheckpointLease.release(prev) // superseded round vocab (guide §5)
-        costs += ((r, accepted.length, pairRows, (System.nanoTime() - t0) / 1e9))
-        r += 1
-      }
-    }
-    lastRoundCosts = costs.toSeq
-    rules.toSeq.toDF("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
-  }
-
   /** Tokenizer APPLY — encode the corpus under the [[bpeTrain]]ed merges
     * (the deployment leg next to training): per-document subword-token
     * statistics after `rounds` merges. Because BPE merges act within
@@ -700,8 +610,7 @@ object TextAnalysis {
     * the number a tokenizer-prep pipeline actually tracks.
     */
   def bpeEncode(docs: DataFrame, rounds: Int = 6): DataFrame =
-    encodeWithVocab(docs, bpeTrainState(docs, rounds)._2
-      .select(col("word"), size(col("toks")).cast("long").as("nt")))
+    encodeWithVocab(docs, greedyTokenCounts(docs, rounds))
 
   /** Persist the trained word → token-count vocabulary — the tokenizer's
     * write_index: training runs ONCE (per release, in production), and
@@ -709,9 +618,14 @@ object TextAnalysis {
     * re-deriving it. Same discipline as [[Similarity.persistIvfIndex]].
     */
   def persistBpeVocab(docs: DataFrame, root: String, rounds: Int = 6): Unit =
-    bpeTrainState(docs, rounds)._2
+    greedyTokenCounts(docs, rounds).write.mode("overwrite").parquet(root)
+
+  /** The trained `(word, nt)` mapping: each vocabulary word's token count
+    * after `rounds` greedy merges.
+    */
+  private def greedyTokenCounts(docs: DataFrame, rounds: Int): DataFrame =
+    greedyRounds(docs, rounds)._2
       .select(col("word"), size(col("toks")).cast("long").as("nt"))
-      .write.mode("overwrite").parquet(root)
 
   /** Encode under a PERSISTED vocabulary (read_index + apply): the timed
     * plan's only inputs are the corpus scan and the vocab parquet — no

@@ -981,7 +981,7 @@ object PipelineQueries {
   private val EvalOnly = Set("sim_nndescent_recall", "sim_sq8_recall",
     "sim_pq_adc", "sim_pq_persisted_probe", "sim_ann_rerank", "sim_mmr",
     // the VOCAB-SCALE training drive: ~110 deliberately-sequential
-    // rounds (see bpeTrainDeep) whose wall clock is rounds × the Spark
+    // rounds (see charChunkUnits) whose wall clock is rounds × the Spark
     // job floor — a one-time TRAINING job, not a serving lane. It stays
     // oracle-gated in CORRECTNESS; the headline keeps the 256-rule
     // drive (tx_bpe_train_scaled) as its training representative, and
@@ -2309,7 +2309,8 @@ object PipelineQueries {
     // M=1 the rule degenerates to the plain top-1 — Round11Spec pins
     // batched ≡ one-at-a-time.
     QueryDef("tx_bpe_train_batched",
-      (s, dir) => TextAnalysis.bpeTrainBatched(Tables.documents(s, dir),
+      (s, dir) => TextAnalysis.bpeTrainBatched(
+          TextAnalysis.wordUnits(Tables.documents(s, dir)),
           rounds = 3, batchM = 3, poolK = 12)
         .orderBy("round", "sel_rank"),
       Some(s"""
@@ -2344,8 +2345,9 @@ object PipelineQueries {
     // whole drive) and every rule of every round is replayed against a
     // sequential driver reference in Round12Spec.
     QueryDef("tx_bpe_train_scaled",
-      (s, dir) => TextAnalysis.bpeTrainScaled(Tables.documents(s, dir),
-          targetMerges = 256, batchM = 8, poolK = 48)
+      (s, dir) => TextAnalysis.bpeTrainBatched(
+          TextAnalysis.bigramUnits(Tables.documents(s, dir)),
+          rounds = 96, batchM = 8, poolK = 48, targetMerges = 256)
         .where(col("round") <= 6)
         .orderBy("round", "sel_rank"),
       Some(s"""

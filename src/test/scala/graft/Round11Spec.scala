@@ -90,7 +90,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bpeTrainBatched with batchM = 1 is the one-at-a-time trainer") {
     val batched = graft.analytics.TextAnalysis
-      .bpeTrainBatched(docsDf, rounds = 4, batchM = 1, poolK = 12)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.wordUnits(docsDf),
+        rounds = 4, batchM = 1, poolK = 12)
       .orderBy("round").collect()
       .map(r => (r.getLong(0), r.getString(2), r.getString(3),
         r.getString(4), r.getLong(5)))
@@ -104,7 +105,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bpeTrainBatched matches the driver reference on adversarial batched rounds") {
     val got = graft.analytics.TextAnalysis
-      .bpeTrainBatched(docsDf, rounds = 3, batchM = 3, poolK = 12)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.wordUnits(docsDf),
+        rounds = 3, batchM = 3, poolK = 12)
       .orderBy("round", "sel_rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
         r.getString(4), r.getLong(5)))
@@ -128,7 +130,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     // rule accepts in frequency order).
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val rules = graft.analytics.TextAnalysis
-      .bpeTrainBatched(docs, rounds = 12, batchM = 8, poolK = 32)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.wordUnits(docs),
+        rounds = 12, batchM = 8, poolK = 32)
       .orderBy("round", "sel_rank").collect()
     assert(rules.length > 24,
       s"only ${rules.length} merges over 12 rounds — batching is not batching")
@@ -153,7 +156,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("batched rounds reject interacting pairs: accepted pairs are token-disjoint") {
     val got = graft.analytics.TextAnalysis
-      .bpeTrainBatched(docsDf, rounds = 3, batchM = 3, poolK = 12)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.wordUnits(docsDf),
+        rounds = 3, batchM = 3, poolK = 12)
       .collect()
       .map(r => (r.getLong(0), r.getString(2), r.getString(3)))
     got.groupBy(_._1).foreach { case (round, rs) =>

@@ -90,7 +90,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.analytics.TextAnalysis.bpeTelemetry = true
     val got = try {
       graft.analytics.TextAnalysis
-        .bpeTrainScaled(docs, targetMerges = 256, batchM = 8, poolK = 48)
+        .bpeTrainBatched(graft.analytics.TextAnalysis.bigramUnits(docs),
+          rounds = 96, batchM = 8, poolK = 48, targetMerges = 256)
         .orderBy("round", "sel_rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
           r.getString(4), r.getLong(5))).toSeq
@@ -231,7 +232,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Seq((0L, "aaaa ab abab cc dd ccdd ee ff eeff"),
       (1L, "ab ba cc ddd ee ff")).toDF("doc_id", "text")
     val rules = graft.analytics.TextAnalysis
-      .bpeTrainScaled(docs, targetMerges = 5, batchM = 4, poolK = 16)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.bigramUnits(docs),
+        rounds = 96, batchM = 4, poolK = 16, targetMerges = 5)
       .collect()
     assert(rules.length === 5, s"target overshoot: ${rules.length} rules")
   }

@@ -54,6 +54,14 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
       s"README claims ${rm.group(2)} oracled, code has $nOracled")
   }
 
+  test("driver mains name a failed row by exception class and first message line") {
+    assert(SparkEntry.describeFailure(
+      new IllegalStateException("bad plan\n  +- Scan parquet")) ===
+      "java.lang.IllegalStateException: bad plan")
+    assert(SparkEntry.describeFailure(new RuntimeException(null: String)) ===
+      "java.lang.RuntimeException: ")
+  }
+
   // sf0.01 — the oracle scale; the deep drive needs the full unit
   // population (sf0.001 has the same ~5.5 k distinct chunks, but the
   // registry row runs at the driver's sf0.01 and the replay must match
@@ -425,7 +433,8 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.analytics.TextAnalysis.bpeTelemetry = true
     val got = try {
       graft.analytics.TextAnalysis
-        .bpeTrainDeep(docs, targetMerges = 1024, batchM = 16, poolK = 96)
+        .bpeTrainBatched(graft.analytics.TextAnalysis.charChunkUnits(docs),
+          rounds = 160, batchM = 16, poolK = 96, targetMerges = 1024)
         .orderBy("round", "sel_rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
           r.getString(4), r.getLong(5))).toSeq

@@ -293,7 +293,8 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // unbroken reference at the same knobs
     val unbroken = graft.analytics.TextAnalysis
-      .bpeTrainDeep(docs, targetMerges = 40, batchM = 8, poolK = 48)
+      .bpeTrainBatched(graft.analytics.TextAnalysis.charChunkUnits(docs),
+        rounds = 160, batchM = 8, poolK = 48, targetMerges = 40)
       .select("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
       .as[(Long, Long, String, String, String, Long)].collect().toSeq.sorted
     assert(unbroken.size === 40)
@@ -320,6 +321,71 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
       docs, root, targetMerges = 40, batchM = 8, poolK = 48)
     assert(d2)
     assert(again.count() === 40L)
+  }
+
+  private def bpeRuleRows(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
+      .as[(Long, Long, String, String, String, Long)].collect().toSeq.sorted
+  }
+
+  test("restartable BPE: supply exhausted mid-sitting commits the pending rules and marks done") {
+    import spark.implicits._
+    // two char-chunk units with a merge supply of a few rounds — far
+    // below the target and the sitting length, and below the checkpoint
+    // interval, so the only commit is the one the exhaustion forces
+    val docs = Seq((0L, "abab abab"), (1L, "abc ab")).toDF("doc_id", "text")
+    val root = Files.createTempDirectory("r16-bpe-exhaust")
+    val (first, done) = graft.analytics.TextAnalysis.bpeTrainDeepRestartable(
+      docs, root.toString, targetMerges = 4096, batchM = 16, poolK = 96,
+      roundsPerSitting = 64, checkpointEvery = 16)
+    assert(done, "an exhausted merge supply must finish the drive")
+    val rules = bpeRuleRows(first)
+    assert(rules.nonEmpty && rules.size < 4096)
+    val lastRound = rules.map(_._1).max
+    assert(lastRound < 16, s"supply should run out before round 16: $lastRound")
+    assert(Files.exists(root.resolve("exhausted")), "no exhausted marker")
+    assert(root.resolve("commits").toFile.list().toSeq === Seq(f"commit-$lastRound%05d"),
+      "the pending rules were not committed at exhaustion")
+    assert(bpeRuleRows(graft.analytics.TextAnalysis
+      .loadBpeRules(spark, root.toString)) === rules)
+    // a further sitting on the exhausted root trains nothing
+    val (again, d2) = graft.analytics.TextAnalysis.bpeTrainDeepRestartable(
+      docs, root.toString, targetMerges = 4096, batchM = 16, poolK = 96,
+      roundsPerSitting = 64, checkpointEvery = 16)
+    assert(d2)
+    assert(bpeRuleRows(again) === rules)
+  }
+
+  test("restartable BPE: a rules batch written without its commit marker is dropped on resume") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    def drive(root: String, roundsPerSitting: Int): Boolean =
+      graft.analytics.TextAnalysis.bpeTrainDeepRestartable(
+        docs, root, targetMerges = 40, batchM = 8, poolK = 48,
+        roundsPerSitting = roundsPerSitting, checkpointEvery = 2)._2
+    val unbrokenRoot = Files.createTempDirectory("r16-bpe-ref").toString
+    assert(drive(unbrokenRoot, 64))
+    val unbroken = bpeRuleRows(
+      graft.analytics.TextAnalysis.loadBpeRules(spark, unbrokenRoot))
+    assert(unbroken.size === 40)
+    // first sitting commits rounds 1-2; then a crash between round 3's
+    // data write and its ack leaves batch 3 on disk with no marker
+    val root = Files.createTempDirectory("r16-bpe-orphan")
+    assert(!drive(root.toString, 2))
+    assert(Files.exists(root.resolve("commits/commit-00002")))
+    val orphan = root.resolve("rules/batch-00003.parquet")
+    Seq((3L, 1L, "zz", "zz", "zzzz", 1L))
+      .toDF("round", "sel_rank", "pair_a", "pair_b", "merged", "cnt")
+      .coalesce(1).write.parquet(orphan.toString)
+    var sittings = 0
+    var done = false
+    while (!done && sittings < 20) { done = drive(root.toString, 64); sittings += 1 }
+    assert(done)
+    assert(!Files.exists(orphan), "the unacknowledged batch survived the resume")
+    assert(bpeRuleRows(graft.analytics.TextAnalysis
+      .loadBpeRules(spark, root.toString)) === unbroken,
+      "resume over an orphaned batch diverged from the unbroken run")
   }
 
   // --------------------------------------------- quantile sketch error

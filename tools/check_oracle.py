@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [name,name,...]
 
 Reads each <verifyOutDir>/<name>/ parquet result (from `graft.Verify`) and
 the dumped oracle_sql.json, runs each oracle in DuckDB over <sfDir>'s
@@ -69,10 +69,15 @@ def main(sf_dir: str, out_dir: str, only: str = "") -> int:
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
+    n_pass = n_fail = 0
     if only:
         names = set(only.split(","))
+        # a requested row with no oracle (a typo, or a row the dump does
+        # not register) must fail, not silently shrink the checked set
+        for name in sorted(names - oracle.keys()):
+            print(f"FAIL {name}: no oracle in oracle_sql.json")
+            n_fail += 1
         oracle = {k: v for k, v in oracle.items() if k in names}
-    n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         res_dir = Path(out_dir) / name
         if not res_dir.exists():
@@ -120,7 +125,7 @@ def main(sf_dir: str, out_dir: str, only: str = "") -> int:
                 i = bad.idxmax()
                 print(f"  first diff row {i}:\n  got : {got.loc[i].to_dict()}\n  want: {want.loc[i].to_dict()}")
             n_fail += 1
-    print(f"\n{n_pass} passed, {n_fail} failed / {len(oracle)} oracles")
+    print(f"\n{n_pass} passed, {n_fail} failed / {n_pass + n_fail} oracles")
     return 1 if n_fail else 0
 
 
